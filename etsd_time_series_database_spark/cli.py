@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etsd_time_series_database_spark.session import get_spark
+from etsd_time_series_database_spark.sources.store import read_ts_parquet
 from etsd_time_series_database_spark.timeparse import resolve_range
 
 _ops = importlib.import_module(
@@ -44,30 +45,11 @@ _ops = importlib.import_module(
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    ts_field = next((f for f in df.schema.fields if f.name == "ts"), None)
-    if ts_field is not None and ts_field.dataType.simpleString() == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000").cast("long")))
-    elif (
-        ts_field is not None
-        and ts_field.dataType.simpleString() == "timestamp_ntz"
-    ):
-        # sessions without the nanosAsLong conf read parquet NANOS as
-        # NTZ; unix_micros & friends want TIMESTAMP. Convert via the
-        # NTZ-epoch diff (store.load_table's formulation), which is
-        # session-timezone INDEPENDENT — cli.main accepts external
-        # SparkSessions, and a plain cast in a non-UTC session would
-        # shift every epoch-derived bucket and digest.
-        df = df.withColumn(
-            "ts",
-            F.timestamp_micros(
-                F.expr(
-                    "timestampdiff(MICROSECOND,"
-                    " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-                )
-            ),
-        )
-    return df
+    """Every verb's events read: ``sources.store.read_ts_parquet``, so
+    nanos, naive and UTC timestamps convert exactly as in
+    ``load_table`` — also through a caller's SparkSession that lacks
+    this repo's confs."""
+    return read_ts_parquet(spark, path)
 
 
 def _bounds(df: DataFrame, ts: str = "ts") -> tuple[datetime, datetime]:
@@ -1039,18 +1021,20 @@ def cmd_amend(args, spark: SparkSession) -> int:
     day-scoped downsample refresh (recover --days) over exactly the
     amended days so derived tiers never go stale. Exit 2 if the target
     is not a dt= store OR a --refresh-sink/--refresh-digest target is
-    missing/incompatible (checked BEFORE any rewrite — sidecar compare
-    when the target carries one, the bucket-alignment probe when it
-    predates sidecars — a bad refresh target must not leave the store
-    amended but the tiers stale), 3 if
-    the corrections are rejected (duplicate keys, or a cross-day move
-    under --cross-day fail)."""
+    missing or fails ``sources.store.check_day_tier`` (checked BEFORE
+    any rewrite — a bad refresh target must not leave the store
+    amended but the tiers stale), 3 if the corrections are rejected
+    (duplicate keys, or a cross-day move under --cross-day fail)."""
     from etsd_time_series_database_spark.sources.store import (
         amend_events,
-        buckets_misaligned,
+        check_day_tier,
+        digest_tier,
         list_date_partitions,
-        read_digest_tier_meta,
-        read_meta_sidecar,
+        refresh_digest_tier,
+    )
+    from etsd_time_series_database_spark.streaming.ingest import (
+        downsample_tier,
+        refresh_downsample,
     )
 
     if not list_date_partitions(spark, args.path):
@@ -1065,100 +1049,32 @@ def cmd_amend(args, spark: SparkSession) -> int:
     # store amended with its derived tiers silently stale; a missing
     # target would come back holding ONLY the amended days — a partial
     # tier masquerading as complete
-    if args.refresh_sink:
-        if int(args.refresh_width) <= 0 or 86_400 % int(
-            args.refresh_width
-        ) != 0:
-            # the same rule refresh_downsample enforces, checked here
-            # so it cannot fire AFTER the store rewrite (<= 0 first:
-            # a zero width must hit this message, not ZeroDivisionError)
-            print(
-                f"amend: --refresh-width {args.refresh_width} must be "
-                "a positive divisor of 86400 — a bucket would span a "
-                "day boundary (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        if not list_date_partitions(spark, args.refresh_sink):
-            print(
-                f"amend: --refresh-sink {args.refresh_sink} is not an "
-                "existing dt=-partitioned downsample sink; build it "
-                "with `recover --partitioned` first (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        sink_meta = read_meta_sidecar(
-            spark, args.refresh_sink, "_downsample_meta.json"
-        )
-        if sink_meta is not None and sink_meta["width_s"] != int(
-            args.refresh_width
-        ):
-            print(
-                f"amend: --refresh-sink {args.refresh_sink} was built "
-                f"with width_s={sink_meta['width_s']} but "
-                f"--refresh-width={args.refresh_width}; pass the "
-                "sink's own width (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        if sink_meta is None and buckets_misaligned(
-            spark, args.refresh_sink, args.refresh_width, "bucket_ts"
-        ):
-            # pre-sidecar sink: the sidecar compare above was vacuous —
-            # run the library's alignment probe HERE so an incompatible
-            # width is rejected before the store rewrite, not after it
-            print(
-                f"amend: --refresh-sink {args.refresh_sink} holds "
-                "buckets not aligned to --refresh-width="
-                f"{args.refresh_width} — it was built at a different "
-                "width; pass the sink's own width (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-    if args.refresh_digest:
-        if int(args.digest_bucket) <= 0 or 86_400 % int(
-            args.digest_bucket
-        ) != 0:
-            print(
-                f"amend: --digest-bucket {args.digest_bucket} must be "
-                "a positive divisor of 86400 — a digest bucket would "
-                "span a day boundary (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        if not list_date_partitions(spark, args.refresh_digest):
-            print(
-                f"amend: --refresh-digest {args.refresh_digest} is not "
-                "an existing dt=-partitioned digest tier; build it "
-                "with the `digest-tier` verb first (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        tier_meta = read_digest_tier_meta(spark, args.refresh_digest)
-        if tier_meta is not None and tier_meta["bucket_s"] != int(
-            args.digest_bucket
-        ):
-            print(
-                f"amend: --refresh-digest {args.refresh_digest} was "
-                f"built with bucket_s={tier_meta['bucket_s']} but "
-                f"--digest-bucket={args.digest_bucket}; pass the "
-                "tier's own bucket (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        if tier_meta is None and buckets_misaligned(
-            spark, args.refresh_digest, args.digest_bucket, "bucket_us"
-        ):
-            # pre-sidecar tier: same before-any-rewrite probe as the
-            # sink branch above
-            print(
-                f"amend: --refresh-digest {args.refresh_digest} holds "
-                "digest buckets not aligned to --digest-bucket="
-                f"{args.digest_bucket} — it was built at a different "
-                "bucket; pass the tier's own bucket (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
+    try:
+        targets = []
+        if args.refresh_sink:
+            targets.append((
+                "--refresh-sink", args.refresh_sink,
+                downsample_tier(args.refresh_width),
+                "downsample sink; build it with `recover --partitioned`",
+            ))
+        if args.refresh_digest:
+            targets.append((
+                "--refresh-digest", args.refresh_digest,
+                digest_tier(args.digest_bucket),
+                "digest tier; build it with the `digest-tier` verb",
+            ))
+        for flag, path, tier, what in targets:
+            if not list_date_partitions(spark, path):
+                print(
+                    f"amend: {flag} {path} is not an existing "
+                    f"dt=-partitioned {what} first (store unchanged)",
+                    file=sys.stderr,
+                )
+                return 2
+            check_day_tier(spark, path, tier)
+    except ValueError as exc:
+        print(f"amend: {exc} (store unchanged)", file=sys.stderr)
+        return 2
     corrections = _load_events(spark, args.source)
     try:
         stats = amend_events(
@@ -1177,54 +1093,36 @@ def cmd_amend(args, spark: SparkSession) -> int:
         f"{stats['inserted']}, moved {stats['moved']} across "
         f"{len(stats['partitions'])} partition(s)"
     )
-    if args.refresh_sink:
-        from etsd_time_series_database_spark.streaming.ingest import (
-            refresh_downsample,
-        )
-
-        amended_days = sorted(
-            p.split("=", 1)[1] for p in stats["partitions"]
-        )
-        try:
+    amended_days = sorted(p.split("=", 1)[1] for p in stats["partitions"])
+    try:
+        if args.refresh_sink:
             rstats = refresh_downsample(
                 spark, args.path, args.refresh_sink,
                 width_s=args.refresh_width, days=amended_days,
                 target_files=args.target_files,
             )
-        except ValueError as exc:
-            # residual library-side refusal (the pre-checks above
-            # cover the known cases; anything new must still exit
-            # clean, not as a traceback)
-            print(f"amend: {exc}", file=sys.stderr)
-            return 2
-        print(
-            f"refreshed {args.refresh_sink} for day(s) "
-            f"{', '.join(amended_days)} "
-            f"({sum(rstats.values())} bucket row(s))"
-        )
-    if args.refresh_digest:
-        from etsd_time_series_database_spark.sources.store import (
-            refresh_digest_tier,
-        )
-
-        amended_days = sorted(
-            p.split("=", 1)[1] for p in stats["partitions"]
-        )
-        try:
+            print(
+                f"refreshed {args.refresh_sink} for day(s) "
+                f"{', '.join(amended_days)} "
+                f"({sum(rstats.values())} bucket row(s))"
+            )
+        if args.refresh_digest:
             dstats = refresh_digest_tier(
                 spark, args.path, args.refresh_digest,
                 bucket_s=args.digest_bucket, days=amended_days,
                 target_files=args.target_files,
             )
-        except ValueError as exc:
-            # parameter mismatch against the tier's _digest_meta.json
-            print(f"amend: {exc}", file=sys.stderr)
-            return 2
-        print(
-            f"refreshed digest tier {args.refresh_digest} for day(s) "
-            f"{', '.join(amended_days)} "
-            f"({sum(dstats.values())} digest cell(s))"
-        )
+            print(
+                f"refreshed digest tier {args.refresh_digest} for day(s) "
+                f"{', '.join(amended_days)} "
+                f"({sum(dstats.values())} digest cell(s))"
+            )
+    except ValueError as exc:
+        # residual library-side refusal (the pre-checks above cover
+        # the known cases; anything new must still exit clean, not as
+        # a traceback)
+        print(f"amend: {exc}", file=sys.stderr)
+        return 2
     return 0
 
 

@@ -623,19 +623,21 @@ def minhash_index_compact(
     signatures, recipe and probe results are byte-identical, only the
     file layout changes. Returns {files_before, files_after, rows}.
 
-    The swap is crash-safe in the same way the survivors write is:
-    the compacted copy is fully written to a sibling temp dir first;
-    a crash before the swap leaves the live index untouched. The swap
-    itself (rename live -> ``.__old__``, rename temp -> live) has a
-    brief window where the live path is absent; a crash there leaves
-    a complete copy at ``.__old__`` (and the compacted one at
-    ``.__compact__``) — rename either back to recover. Run it from
-    the index's single writer (the append job owner) — it is a
-    maintenance pass, not a concurrent-writer protocol."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    live = jvm.org.apache.hadoop.fs.Path(path)
-    fs = live.getFileSystem(hconf)
+    The compacted copy is fully written to the sibling
+    ``.__compact__`` dir first and installed with
+    ``sources.store.swap_in_dir``: a crash before the swap leaves the
+    live index untouched, and one inside it leaves a complete copy at
+    ``.__old__`` (and the compacted one at ``.__compact__``) — rename
+    either back to recover. Run it from the index's single writer (the
+    append job owner) — it is a maintenance pass, not a
+    concurrent-writer protocol."""
+    from etsd_time_series_database_spark.sources.store import (
+        _hadoop_fs,
+        swap_in_dir,
+    )
+
+    fs, Path = _hadoop_fs(spark, path)
+    live = Path(path)
 
     def _count_files(p):
         n = 0
@@ -649,11 +651,10 @@ def minhash_index_compact(
 
     before = _count_files(live)
     bands = spark.read.parquet(path)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + ".__compact__"
-    )
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
+    tmp = path.rstrip("/") + ".__compact__"
+    old = path.rstrip("/") + ".__old__"
+    for stale in (tmp, old):
+        fs.delete(Path(stale), True)
     if int(files_per_band) <= 1:
         compacted = bands.repartition(F.col("band"))
     else:
@@ -663,35 +664,15 @@ def minhash_index_compact(
             F.col("band"),
             F.pmod(F.xxhash64(F.col("sig")), F.lit(int(files_per_band))),
         )
-    (
-        compacted.write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(tmp.toString())
-    )
+    compacted.write.mode("overwrite").partitionBy("band").parquet(tmp)
     # carry the recipe table over unchanged
     meta = spark.read.parquet(path + "/_meta")
-    meta.coalesce(1).write.mode("overwrite").parquet(
-        tmp.toString() + "/_meta"
-    )
+    meta.coalesce(1).write.mode("overwrite").parquet(tmp + "/_meta")
     # count the COMPACTED copy (not a second scan of the old index):
     # the stat doubles as a readability check of the new files before
     # anything destructive happens
-    rows = spark.read.parquet(tmp.toString()).count()
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__old__")
-    if fs.exists(old):
-        fs.delete(old, True)
-    # Hadoop rename signals most failures by returning FALSE, not by
-    # raising — every step before a destructive delete must be checked
-    # or a silently failed swap destroys the only complete copy
-    if not fs.rename(live, old):
-        raise IOError(f"compact: rename {live} -> {old} failed; "
-                      "live index untouched")
-    if not fs.rename(tmp, live):
-        # put the live index back before reporting
-        fs.rename(old, live)
-        raise IOError(f"compact: rename {tmp} -> {live} failed; "
-                      "original index restored")
-    fs.delete(old, True)
+    rows = spark.read.parquet(tmp).count()
+    swap_in_dir(fs, Path, tmp, path, old, "minhash compact")
     return {
         "files_before": before,
         "files_after": _count_files(live),
@@ -897,30 +878,22 @@ def incremental_dedup(
         else survivors_path is not None
     )
     if survivors_path is not None:
-        # persist survivors FIRST (temp dir + rename via the Hadoop
-        # FileSystem API so HDFS paths work too; a torn write can
-        # never be mistaken for output), THEN append their
+        # persist survivors FIRST (temp dir + the crash-safe install,
+        # so a torn write can never be mistaken for output and a
+        # failed install raises before the append), THEN append their
         # signatures — the crash-safe ordering
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        dst = jvm.org.apache.hadoop.fs.Path(survivors_path)
-        tmp = jvm.org.apache.hadoop.fs.Path(
-            survivors_path.rstrip("/") + ".__tmp__"
+        from etsd_time_series_database_spark.sources.store import (
+            _hadoop_fs,
+            swap_in_dir,
         )
-        fs = dst.getFileSystem(hconf)
-        if fs.exists(tmp):
-            fs.delete(tmp, True)
-        survivors.write.mode("overwrite").parquet(tmp.toString())
-        if fs.exists(dst):
-            fs.delete(dst, True)
-        # Hadoop rename signals most failures by returning FALSE —
-        # appending after a silently failed survivors write would be
-        # exactly the unsafe ordering this function exists to prevent
-        if not fs.rename(tmp, dst):
-            raise IOError(
-                f"incremental_dedup: rename {tmp} -> {dst} failed; "
-                "index NOT appended"
-            )
+
+        fs, Path = _hadoop_fs(spark, survivors_path)
+        tmp = survivors_path.rstrip("/") + ".__tmp__"
+        old = survivors_path.rstrip("/") + ".__old__"
+        for stale in (tmp, old):
+            fs.delete(Path(stale), True)
+        survivors.write.mode("overwrite").parquet(tmp)
+        swap_in_dir(fs, Path, tmp, survivors_path, old, "incremental_dedup")
         if do_append:
             # survivors' signatures = the shard band table minus
             # dropped ids minus ROWS the index already holds. The

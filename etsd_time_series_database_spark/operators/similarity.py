@@ -915,18 +915,18 @@ def rebalance_cells(
        ``max(cent_id) + 1 ...`` allocated over hot cells ascending,
        sub-seeds by ascending seed key — deterministic, so a SQL
        oracle can reproduce the whole operation (x86).
-    3. The new sub-cell dirs install via the same staged-rename
-       protocol as the store verbs: data lands under an
-       underscore-temp (invisible to Spark's listing), the hot dir
+    3. The new sub-cell dirs install one cell as N: data lands under
+       an underscore-temp (invisible to Spark's listing), the hot dir
        moves aside, sub-dirs rename in, the old dir is deleted last —
        a crash leaves either the old cell or a rollback-able
-       ``__old_*``, never double-counted vectors.
+       ``__old_*``, never double-counted vectors. (The one-for-one
+       ``sources.store.swap_in_dir`` cannot express this install.)
     4. Retired cells' vectors (if any) append into surviving cell
        dirs via the :func:`ivf_append` path (O(retired rows)), then
        the empty dirs are removed.
     5. ``_centroids`` is rewritten (split + retired ids out, sub-ids
-       in) through a temp + rename swap, so probers re-plan against
-       the new geometry atomically.
+       in) through ``sources.store.swap_in_dir``, so probers re-plan
+       against the new geometry atomically.
 
     Cost: O(hot + retired cells' data); the corpus is never reshuffled
     and untouched dirs are never rewritten (byte-identical — pinned in
@@ -938,7 +938,10 @@ def rebalance_cells(
     the LLM-pipeline half of the brief (index maintenance under skew,
     the serving-latency-tail fix x83 measures).
     """
-    from etsd_time_series_database_spark.sources.store import _hadoop_fs
+    from etsd_time_series_database_spark.sources.store import (
+        _hadoop_fs,
+        swap_in_dir,
+    )
 
     fs, Path = _hadoop_fs(spark, path)
     check_ivf_meta(spark, path, key, vec)
@@ -1055,15 +1058,10 @@ def rebalance_cells(
     token = uuid.uuid4().hex
     ctmp = f"{path}/__cent_{token}"
     cent_df.coalesce(1).write.mode("overwrite").parquet(ctmp)
-    cdir = Path(path + "/_centroids")
-    cold = Path(f"{path}/__centold_{token}")
-    if not fs.rename(cdir, cold):
-        fs.delete(Path(ctmp), True)
-        raise IOError("rebalance: failed to move _centroids aside")
-    if not fs.rename(Path(ctmp), cdir):
-        fs.rename(cold, cdir)
-        raise IOError("rebalance: failed to install new _centroids")
-    fs.delete(cold, True)
+    swap_in_dir(
+        fs, Path, ctmp, path + "/_centroids", f"{path}/__centold_{token}",
+        "rebalance",
+    )
     # the sidecar tracks the geometry the rebalance just changed:
     # nlist follows the surviving centroid set (dim/metric/columns
     # are invariants of the layout)

@@ -17,9 +17,11 @@ thousands of files and pruned by Catalyst before any I/O happens.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -34,6 +36,9 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+DIGEST_META = "_digest_meta.json"
+
 
 def _parse_ts_literal(literal: str) -> datetime:
     """Parse a ts_range bound. Grammar = ISO-8601 date/timestamp plus
@@ -121,8 +126,23 @@ def load_table(
     name: str,
     ts_range: tuple[str | None, str | None] | None = None,
 ) -> DataFrame:
-    """Load one testdata table. Schema comes from the Parquet footer
-    (the analog of reading the ETSD header block, code/etsd.c:41-123).
+    """Load one testdata table (``{sf_dir}/{name}.parquet``) through
+    :func:`read_ts_parquet`."""
+    return read_ts_parquet(
+        spark, os.path.join(sf_dir, f"{name}.parquet"), ts_range
+    )
+
+
+def read_ts_parquet(
+    spark: SparkSession,
+    path: str,
+    ts_range: tuple[str | None, str | None] | None = None,
+) -> DataFrame:
+    """Read a parquet table or file whose ``ts`` may be stored in any
+    of the units this repo meets — the one timestamp path every batch
+    reader (``load_table``, the CLI verbs) shares. Schema comes from
+    the Parquet footer (the analog of reading the ETSD header block,
+    code/etsd.c:41-123).
 
     Nanosecond parquet timestamps arrive as LongType (session conf
     ``spark.sql.legacy.parquet.nanosAsLong``) and are floor-truncated
@@ -142,7 +162,7 @@ def load_table(
     converted column; this prefilter is a superset.
     """
     _ensure_ts_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(path)
     ts_kind = _ts_kind(df)
     raw_ns = ts_kind == "bigint"
     # Naive parquet timestamps (isAdjustedToUTC=false) surface as
@@ -257,15 +277,12 @@ def compact_partition(
     ``target_files`` sorted files. Returns the number of files before
     compaction.
 
-    Swap protocol (Hadoop FS, object-store aware): write the compacted
-    data to a temp dir, rename the live partition ASIDE, rename the
-    temp dir into place, then delete the old data — at no point is the
-    partition simply absent, and a crash mid-swap leaves either the old
-    dir (recoverable by re-running) or both dirs (old one under
-    ``__old_*``), never neither. Note rename is atomic on HDFS but
-    copy-based on S3; for serious object-store deployments layer a
-    table format (Delta/Iceberg OPTIMIZE) on top — this implements the
-    same maintenance contract without that dependency.
+    The compacted data is written to a temp dir and installed with
+    :func:`swap_in_dir` (Hadoop FS, object-store aware). Note rename is
+    atomic on HDFS but copy-based on S3; for serious object-store
+    deployments layer a table format (Delta/Iceberg OPTIMIZE) on top —
+    this implements the same maintenance contract without that
+    dependency.
 
     Only safe on partitions no longer receiving appends (i.e. past the
     ingest watermark) — same contract as the reference's rotation
@@ -289,14 +306,7 @@ def compact_partition(
         .write.mode("overwrite")
         .parquet(tmp)
     )
-    old = f"{path}/__old_{token}"
-    if not fs.rename(Path(part_dir), Path(old)):
-        raise IOError(f"compact: failed to move {part_dir} aside")
-    if not fs.rename(Path(tmp), Path(part_dir)):
-        # roll back so the table is never left without the partition
-        fs.rename(Path(old), Path(part_dir))
-        raise IOError(f"compact: failed to install compacted {part_dir}")
-    fs.delete(Path(old), True)
+    swap_in_dir(fs, Path, tmp, part_dir, f"{path}/__old_{token}", "compact")
     return len(files_before)
 
 
@@ -503,12 +513,10 @@ def sync_partition(
     The partition's parquet files are copied BYTE-IDENTICALLY through
     the Hadoop FileSystem API (no decode/re-encode — works across
     file:/hdfs:/s3a: and guarantees the re-digest converges), staged
-    into a temp dir and installed with the same rename-swap protocol
-    as :func:`compact_partition`: at no point is the partition simply
-    absent, and a crash mid-swap leaves either the old dir or both
-    (old under ``__old_*``), never neither. A partition absent from
-    the source is DELETED from the target (drift-by-extra-data).
-    Returns 'synced' | 'deleted' | 'noop' (absent on both sides).
+    into a temp dir and installed with :func:`swap_in_dir`. A
+    partition absent from the source is DELETED from the target
+    (drift-by-extra-data). Returns 'synced' | 'deleted' | 'noop'
+    (absent on both sides).
 
     Partition-scoped by contract: untouched partitions are never
     listed, read, or rewritten — repair cost is O(drifted days), not
@@ -567,27 +575,14 @@ def refresh_digest_tier(
     of re-scanning both stores, so the cadence of "did my replica
     drift" checks is decoupled from store size. After an ``amend``,
     the tier is stale for exactly the amended days; ``days=[...]``
-    recomputes only those partitions from the store and installs each
-    through the crash-safe rename swap — untouched tier partitions are
-    never listed, read, or rewritten. The day filter goes on the
-    store's ``dt`` PARTITION column alone when present so Catalyst
-    prunes the scan to that one directory — a ``to_date(ts)``
-    predicate is a data-column filter with zero PartitionFilters that
-    plans tasks over every day's files, and is session-timezone
-    dependent besides (plan-pinned). ``days=None`` rebuilds the whole tier.
-    ``bucket_s`` must divide 86400 so no digest bucket spans a day
-    boundary. ``target_files`` sets the per-day output fan-out
-    (default 1 — today's layout; same knob as
-    :func:`compact_partition`).
+    recomputes only those partitions. ``days=None`` rebuilds the
+    whole tier. Both go through :func:`refresh_day_tier`, which owns
+    the rules: ``bucket_s`` must divide 86400, the ``_digest_meta.json``
+    sidecar (``bucket_s``/``channel_col``/``value_col``) must match, the
+    day filter prunes to one store partition, and each day installs
+    through the crash-safe swap. ``digest-diff --materialized`` reads
+    the same sidecar to refuse comparing incompatible tiers.
 
-    The tier root carries a ``_digest_meta.json`` sidecar recording
-    ``bucket_s``/``channel_col``/``value_col`` (underscore-prefixed,
-    so parquet readers ignore it): a day-scoped refresh against a tier
-    built with DIFFERENT parameters raises instead of silently mixing
-    bucket widths, and ``digest-diff --materialized`` uses it to
-    refuse comparing incompatible tiers.
-
-    A day whose store partition vanished drops its tier partition.
     Same arithmetic as :func:`operators.range_stats.range_digest`
     (q77), so a refreshed day is bit-identical to a full recompute of
     that day (test-pinned). Returns {day: n_cells}.
@@ -597,41 +592,141 @@ def refresh_digest_tier(
     stores themselves (cli.cmd_repair), never this table; a stale
     materialized digest must not be able to fake convergence.
     """
-    if int(bucket_s) <= 0 or 86_400 % int(bucket_s) != 0:
-        raise ValueError(
-            f"refresh_digest_tier: bucket_s={bucket_s} must be a "
-            "positive divisor of 86400 — a digest bucket would span a "
-            "day boundary and a day-scoped refresh would be wrong"
-        )
     from etsd_time_series_database_spark.operators.range_stats import (
         range_digest,
     )
 
-    store = spark.read.parquet(store_path)
-    meta = {
-        "bucket_s": int(bucket_s),
-        "channel_col": channel_col,
-        "value_col": value_col,
-    }
-
-    def digest(df: DataFrame) -> DataFrame:
-        return range_digest(
+    tier = digest_tier(bucket_s, channel_col, value_col)  # width checked first
+    return refresh_day_tier(
+        spark,
+        spark.read.parquet(store_path),
+        digest_path,
+        tier,
+        lambda df: range_digest(
             df, bucket_s=bucket_s, channel=channel_col, value=value_col
-        )
+        ),
+        channel_col,
+        F.to_date(F.timestamp_micros("bucket_us")),
+        days,
+        target_files,
+    )
 
-    if days is None:
-        full = digest(store).withColumn(
-            "dt", F.to_date(F.timestamp_micros("bucket_us"))
+
+@dataclass(frozen=True)
+class DayTier:
+    """A derived, ``dt=``-partitioned tier that day-scoped refreshes
+    keep in step with its store (the digest tier, the downsample
+    sink): ``name`` prefixes its errors, ``bucket_col`` holds each
+    bucket's start, and the ``sidecar`` JSON at the tier root records
+    ``meta``, its build parameters. ``width_s`` must divide 86400 —
+    a bucket spanning midnight would make a day's rewrite drop the
+    neighbour day's rows — so a tier with any other width cannot be
+    constructed: the check runs before any store is read."""
+
+    name: str
+    width_s: int
+    bucket_col: str
+    sidecar: str
+    meta: dict
+
+    def __post_init__(self) -> None:
+        if self.width_s <= 0 or 86_400 % self.width_s != 0:
+            raise ValueError(
+                f"{self.name}: bucket width {self.width_s} s must be a "
+                "positive divisor of 86400 — a bucket would span a day "
+                "boundary and a day-scoped refresh would lose the "
+                "neighbour day's rows"
+            )
+
+
+def digest_tier(
+    bucket_s: int, channel_col: str = "event_type", value_col: str = "value"
+) -> DayTier:
+    """The digest tier :func:`refresh_digest_tier` maintains."""
+    return DayTier(
+        "refresh_digest_tier",
+        int(bucket_s),
+        "bucket_us",
+        DIGEST_META,
+        {
+            "bucket_s": int(bucket_s),
+            "channel_col": channel_col,
+            "value_col": value_col,
+        },
+    )
+
+
+def check_day_tier(spark: SparkSession, path: str, tier: DayTier) -> bool:
+    """May a day-scoped refresh of ``tier`` write into ``path``? Raises
+    ValueError when it may not: the tier's sidecar records other build
+    parameters (the refresh would mix bucket widths inside one tier),
+    or a tier that predates sidecars holds buckets not aligned to
+    ``tier.width_s`` (:func:`buckets_misaligned`). Read-only; returns
+    True for such a pre-sidecar tier that passed the probe, which the
+    refresh then stamps with ``tier.meta``. ``cli amend`` calls this
+    before rewriting the store, so a bad refresh target never leaves
+    the store amended and its tiers stale."""
+    existing = read_meta_sidecar(spark, path, tier.sidecar)
+    if existing is not None:
+        if existing != tier.meta:
+            raise ValueError(
+                f"{tier.name}: {path} was built with {existing} but "
+                f"this refresh asked for {tier.meta} — a day-scoped "
+                "refresh with other parameters would mix bucket widths "
+                "inside one tier; rebuild it (days=None) to change them"
+            )
+        return False
+    fs, Path = _hadoop_fs(spark, path)
+    if not fs.exists(Path(path)):
+        return False
+    # a claimed width FINER than the build width divides its buckets
+    # and is undetectable from data; the sidecar closes that for every
+    # tier built since it exists
+    if buckets_misaligned(spark, path, tier.width_s, tier.bucket_col):
+        raise ValueError(
+            f"{tier.name}: {path} holds buckets not aligned to "
+            f"{tier.width_s} s — it was built at a different width; "
+            "pass its own width, or rebuild it (days=None)"
         )
+    return True
+
+
+def refresh_day_tier(
+    spark: SparkSession,
+    source: DataFrame,
+    path: str,
+    tier: DayTier,
+    consolidate: Callable[[DataFrame], DataFrame],
+    channel: str,
+    dt: Column,
+    days: list[str] | None,
+    target_files: int,
+) -> dict:
+    """Rebuild (``days=None``) or day-scope-refresh the derived tier at
+    ``path`` from ``source``, ``consolidate`` mapping store rows to
+    tier rows. Returns {day: n_rows}.
+
+    ``days=None`` rewrites the whole tier ``dt=``-partitioned (``dt``
+    computed from the bucket start), sorted by (``channel``, bucket),
+    and writes the sidecar. ``target_files > 1`` spreads each day over
+    up to that many write tasks with a deterministic (channel,
+    bucket)-hash salt (channel alone degenerates when few channels
+    share a hash parity) — not the round-robin+partitionBy anti-pattern
+    where every task holds a writer for every day — and with an
+    explicit partition count, since AQE coalesces a column-only
+    repartition of a tiny shuffle back into one task per day.
+
+    ``days=[...]`` first runs :func:`check_day_tier` (stamping a
+    validated pre-sidecar tier), then per day consolidates the
+    :func:`day_scoped` store rows, writes them to a temp dir at
+    ``target_files`` files, and installs it with :func:`swap_in_dir`;
+    a day that consolidates to nothing (its store partition vanished,
+    e.g. drained by a cross-day amend) drops its tier partition
+    instead. Untouched tier partitions are never listed, read, or
+    rewritten."""
+    if days is None:
+        full = consolidate(source).withColumn("dt", dt)
         if int(target_files) > 1:
-            # spread each day across up to target_files write tasks —
-            # deterministic (channel, bucket)-hash salt, so the
-            # fan-out knob works for the full rebuild exactly as for a
-            # --days refresh without the round-robin+partitionBy
-            # anti-pattern (every task holding a writer for every day)
-            # explicit partition count: a column-only repartition is
-            # advisory and AQE coalesces the tiny shuffle back into
-            # one task per day, silently undoing the salt
             n_part = int(
                 spark.conf.get("spark.sql.shuffle.partitions", "200")
             )
@@ -639,20 +734,20 @@ def refresh_digest_tier(
                 n_part,
                 F.col("dt"),
                 F.pmod(
-                    F.abs(F.hash(channel_col, "bucket_us")),
+                    F.abs(F.hash(channel, tier.bucket_col)),
                     F.lit(int(target_files)),
                 ),
             )
         else:
             full = full.repartition("dt")
         (
-            full.sortWithinPartitions(channel_col, "bucket_us")
+            full.sortWithinPartitions(channel, tier.bucket_col)
             .write.mode("overwrite")
             .partitionBy("dt")
-            .parquet(digest_path)
+            .parquet(path)
         )
-        write_digest_tier_meta(spark, digest_path, meta)
-        out = spark.read.parquet(digest_path)
+        write_meta_sidecar(spark, path, tier.sidecar, tier.meta)
+        out = spark.read.parquet(path)
         return {
             r.dt.isoformat(): r.n
             for r in out.groupBy("dt").count().withColumnRenamed(
@@ -661,71 +756,48 @@ def refresh_digest_tier(
         }
     import uuid
 
-    fs, Path = _hadoop_fs(spark, digest_path)
-    existing = read_digest_tier_meta(spark, digest_path)
-    if existing is not None and existing != meta:
-        raise ValueError(
-            f"refresh_digest_tier: tier {digest_path} was built with "
-            f"{existing} but this refresh asked for {meta} — a "
-            "day-scoped refresh with different parameters would mix "
-            "bucket widths inside one tier; rebuild it (days=None) to "
-            "change parameters"
-        )
-    if existing is None and fs.exists(Path(digest_path)):
-        # pre-sidecar tier: validate the claimed bucket against the
-        # existing buckets' alignment before adopting it as the meta —
-        # stamping an unvalidated claim would lock the wrong bucket in
-        # (a FINER claim divides the true buckets and is undetectable
-        # from data; the sidecar closes that for new builds)
-        if buckets_misaligned(spark, digest_path, bucket_s, "bucket_us"):
-            raise ValueError(
-                f"refresh_digest_tier: tier {digest_path} holds buckets "
-                f"not aligned to bucket_s={bucket_s} — it was built at "
-                "a different bucket; pass the tier's own bucket, or "
-                "rebuild it (days=None)"
-            )
-        write_digest_tier_meta(spark, digest_path, meta)
+    if check_day_tier(spark, path, tier):
+        write_meta_sidecar(spark, path, tier.sidecar, tier.meta)
+    fs, Path = _hadoop_fs(spark, path)
     stats: dict = {}
     for d in sorted(days):
-        fresh = digest(
-            day_scoped(store, d)
-        ).repartition(int(target_files)).sortWithinPartitions(
-            channel_col, "bucket_us"
+        fresh = (
+            consolidate(day_scoped(source, d))
+            .repartition(int(target_files))
+            .sortWithinPartitions(channel, tier.bucket_col)
         )
         token = uuid.uuid4().hex
-        tmp = f"{digest_path}/__digest_{token}"
+        tmp = f"{path}/__refresh_{token}"
         fresh.write.mode("overwrite").parquet(tmp)
         n = spark.read.parquet(tmp).count()
-        part_dir = f"{digest_path}/dt={d}"
-        had_old = fs.exists(Path(part_dir))
+        part_dir = f"{path}/dt={d}"
         if n == 0:
             fs.delete(Path(tmp), True)
-            if had_old:
-                fs.delete(Path(part_dir), True)
-            stats[d] = 0
-            continue
-        swap_in_dir(
-            fs, Path, tmp, part_dir, f"{digest_path}/__old_{token}",
-            "digest refresh",
-        )
+            fs.delete(Path(part_dir), True)
+        else:
+            swap_in_dir(
+                fs, Path, tmp, part_dir, f"{path}/__old_{token}", tier.name
+            )
         stats[d] = n
     return stats
 
 
 def swap_in_dir(fs, Path, tmp: str, dst: str, old: str, label: str) -> None:
-    """The crash-safe directory swap every single-dir maintenance
-    verb shares (amend, day-scoped refresh x2, ivf-compact): the new
-    data is FULLY written at ``tmp`` before anything destructive
-    happens; ``dst`` (if present) moves aside to ``old``, ``tmp``
-    renames in, ``old`` is deleted last. Hadoop rename signals most
-    failures by returning FALSE, not raising, so every step before a
-    destructive delete is checked: a failed move-aside deletes only
-    the temp; a failed install renames the old dir back. A crash
-    leaves either the old dir or a rollback-able ``old`` — the
-    target is never simply absent with no recovery copy, and never
-    double-counted. Callers pick token-suffixed ``tmp``/``old``
-    names with an underscore prefix (invisible to Spark's listing).
-    """
+    """The crash-safe directory install, and the only one: every verb
+    that replaces one directory calls it — partition compaction (batch
+    store and ingest sink), amend, sync, the day-tier refresh, IVF
+    cell compaction, the rebalance centroid table, and the dedup index
+    compaction and survivors output. The new data is FULLY written at
+    ``tmp`` before anything destructive happens; ``dst`` (if present)
+    moves aside to ``old``, ``tmp`` renames in, ``old`` is deleted
+    last. Hadoop rename signals most failures by returning FALSE, not
+    raising, so every step before a destructive delete is checked: a
+    failed move-aside deletes only the temp; a failed install renames
+    the old dir back. A crash leaves either the old dir or a
+    rollback-able ``old`` — the target is never simply absent with no
+    recovery copy, and never double-counted. Callers pick ``tmp`` and
+    ``old`` names no reader lists (underscore-prefixed inside a table,
+    or dot-suffixed siblings) and that no earlier run left behind."""
     had_old = fs.exists(Path(dst))
     if had_old and not fs.rename(Path(dst), Path(old)):
         fs.delete(Path(tmp), True)
@@ -836,20 +908,10 @@ def buckets_misaligned(
     return bool(df.filter(col % w_us != 0).limit(1).count())
 
 
-def write_digest_tier_meta(
-    spark: SparkSession, tier_path: str, meta: dict
-) -> None:
-    """Digest-tier sidecar (``_digest_meta.json``): what lets
-    ``digest-diff --materialized`` refuse comparing tiers built at
-    different ``bucket_s`` up front instead of reporting total
-    spurious drift."""
-    write_meta_sidecar(spark, tier_path, "_digest_meta.json", meta)
-
-
 def read_digest_tier_meta(spark: SparkSession, tier_path: str) -> dict | None:
     """The ``_digest_meta.json`` sidecar of a digest tier (None for a
     pre-sidecar or foreign table)."""
-    return read_meta_sidecar(spark, tier_path, "_digest_meta.json")
+    return read_meta_sidecar(spark, tier_path, DIGEST_META)
 
 
 def list_date_partitions(spark: SparkSession, path: str) -> list[str]:
@@ -916,21 +978,31 @@ def write_bucketed_table(
     no metastore entry, and every LATER process (whose fresh metastore
     has never heard of the table) then fails saveAsTable with
     LOCATION_ALREADY_EXISTS — .mode("overwrite") only overwrites
-    REGISTERED tables. Drop the registration if any and clear the
-    orphaned default-warehouse location first.
+    REGISTERED tables. So drop the registration if any — a registered
+    managed table's catalog-resolved location goes with it — and clear
+    the default-warehouse directory ``{warehouse}/{name}`` only when it
+    can be nothing but such an orphan: the name is unqualified, the
+    current database is ``default``, and no table of that name is
+    registered. Under ``USE other`` that directory belongs to
+    ``default.{name}``, which an overwrite of ``other.{name}`` must not
+    touch.
     """
     if mode == "overwrite":
         spark = df.sparkSession
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
+        orphan = (
+            "." not in table_name
+            and spark.catalog.currentDatabase() == "default"
+            and not spark.catalog.tableExists(table_name)
         )
-        loc = f"{wh.rstrip('/')}/{table_name.lower()}"
-        try:
-            fs, Path = _hadoop_fs(spark, loc)
-            fs.delete(Path(loc), True)
-        except Exception:
-            pass  # non-default layouts: saveAsTable reports precisely
+        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
+        if orphan:
+            wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+            loc = f"{wh.rstrip('/')}/{table_name.lower()}"
+            try:
+                fs, Path = _hadoop_fs(spark, loc)
+                fs.delete(Path(loc), True)
+            except Exception:
+                pass  # non-default layouts: saveAsTable reports precisely
     w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, bucket_col)
     if sort_col is not None:
         w = w.sortBy(sort_col)

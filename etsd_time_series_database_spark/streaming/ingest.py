@@ -36,10 +36,18 @@ the parquet sink partitions by date so downstream batch reads prune.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etsd_time_series_database_spark.sources.store import (
+    DayTier,
+    _hadoop_fs,
+    refresh_day_tier,
+    swap_in_dir,
+)
 
 CANONICAL_SCHEMA = "ts timestamp, source string, channel string, value double, status int"
 
@@ -102,6 +110,38 @@ def union_sources(dfs: list[DataFrame]) -> DataFrame:
     return out
 
 
+def consolidate(df: DataFrame, keys: list[str], width_s: int) -> DataFrame:
+    """The downsample consolidation (the RRA step, edoRRD
+    code/plugins/edoRRD.c:44-74): per ``keys`` and ``width_s``-second
+    bucket, ``(*keys, bucket_ts, n, sum_value, avg_value, min_value,
+    max_value)``. The live foreachBatch sink, :func:`replay` and
+    :func:`refresh_downsample` all call it, so a sink maintained any of
+    those ways is bit-identical (test-pinned). ``sum_value`` is the
+    exact DECIMAL sum carried beside the display ``avg_value``: sums
+    compose associatively where stored doubles don't, which is what
+    lets :func:`operators.trends.fetch_from_tier` answer coarser
+    requests from the sink bit-identically to a raw scan."""
+    return (
+        df.groupBy(*keys, F.window("ts", f"{int(width_s)} seconds").alias("w"))
+        .agg(
+            F.count("value").alias("n"),
+            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value"),
+            F.avg("value").alias("avg_value"),
+            F.min("value").alias("min_value"),
+            F.max("value").alias("max_value"),
+        )
+        .select(
+            *keys,
+            F.col("w.start").alias("bucket_ts"),
+            "n",
+            "sum_value",
+            "avg_value",
+            "min_value",
+            "max_value",
+        )
+    )
+
+
 def write_ingest_epoch(
     batch: DataFrame,
     epoch_id: int,
@@ -136,30 +176,7 @@ def write_ingest_epoch(
     )
     if downsample_to is not None:
         (
-            batch.groupBy(
-                "source",
-                "channel",
-                F.window("ts", f"{downsample_width_s} seconds").alias("w"),
-            )
-            .agg(
-                F.count("value").alias("n"),
-                F.sum(F.col("value").cast("decimal(18,6)")).alias(
-                    "sum_value"
-                ),
-                F.avg("value").alias("avg_value"),
-                F.min("value").alias("min_value"),
-                F.max("value").alias("max_value"),
-            )
-            .select(
-                "source",
-                "channel",
-                F.col("w.start").alias("bucket_ts"),
-                "n",
-                "sum_value",
-                "avg_value",
-                "min_value",
-                "max_value",
-            )
+            consolidate(batch, ["source", "channel"], downsample_width_s)
             .withColumn("__epoch", F.lit(int(epoch_id)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -411,28 +428,8 @@ def replay(
     authoritative store). Same consolidation as the live foreachBatch
     sink, so a recovered sink is bit-identical to one maintained live.
     """
-    raw = spark.read.parquet(raw_path)
     (
-        raw.groupBy(
-            "source", "channel", F.window("ts", f"{width_s} seconds").alias("w")
-        )
-        .agg(
-            F.count("value").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value"),
-            F.avg("value").alias("avg_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .select(
-            "source",
-            "channel",
-            F.col("w.start").alias("bucket_ts"),
-            "n",
-            "sum_value",
-            "avg_value",
-            "min_value",
-            "max_value",
-        )
+        consolidate(spark.read.parquet(raw_path), ["source", "channel"], width_s)
         .write.mode("overwrite")
         .parquet(sink_path)
     )
@@ -454,10 +451,10 @@ def compact_ingest_partition(
     directory depth stays uniform for Spark's partition discovery and
     :func:`read_ingest_table` keeps dropping the column.
 
-    Same rename-swap protocol as ``sources.store.compact_partition``
-    (temp dir fully written first; the partition is never simply
-    absent; a crash leaves old or old+new, recoverable). Same
-    contract, too: only for partitions past the ingest watermark — a
+    The merged partition is written to a temp dir and installed with
+    ``sources.store.swap_in_dir``, like
+    ``sources.store.compact_partition``. Same contract, too: only for
+    partitions past the ingest watermark — a
     micro-batch RETRY of a merged epoch would re-create its
     ``__epoch=N`` dir beside ``-1`` and duplicate those rows, which is
     exactly the at-least-once window the closed-partition rule
@@ -465,8 +462,6 @@ def compact_ingest_partition(
     code/etsdSave.c:80-99). Returns {files_before, files_after, rows}.
     """
     import uuid
-
-    from etsd_time_series_database_spark.sources.store import _hadoop_fs
 
     fs, Path = _hadoop_fs(spark, path)
     part_dir = f"{path}/{partition}"
@@ -495,14 +490,9 @@ def compact_ingest_partition(
         .parquet(tmp)
     )
     rows = spark.read.parquet(tmp).count()
-    old = f"{path}/__old_{token}"
-    if not fs.rename(Path(part_dir), Path(old)):
-        fs.delete(Path(tmp), True)
-        raise IOError(f"ingest compact: failed to move {part_dir} aside")
-    if not fs.rename(Path(tmp), Path(part_dir)):
-        fs.rename(Path(old), Path(part_dir))
-        raise IOError(f"ingest compact: failed to install {part_dir}")
-    fs.delete(Path(old), True)
+    swap_in_dir(
+        fs, Path, tmp, part_dir, f"{path}/__old_{token}", "ingest compact"
+    )
     return {
         "files_before": files_before,
         "files_after": _count_files(part_dir),
@@ -552,8 +542,6 @@ def compact_stream_sink(
     """
     import json as _json
     import uuid
-
-    from etsd_time_series_database_spark.sources.store import _hadoop_fs
 
     fs, Path = _hadoop_fs(spark, path)
     md = f"{path}/_spark_metadata"
@@ -689,6 +677,18 @@ def compact_stream_sink(
     }
 
 
+def downsample_tier(width_s: int) -> DayTier:
+    """The downsample sink :func:`refresh_downsample` maintains: its
+    ``_downsample_meta.json`` sidecar records ``width_s``."""
+    return DayTier(
+        "refresh_downsample",
+        int(width_s),
+        "bucket_ts",
+        "_downsample_meta.json",
+        {"width_s": int(width_s)},
+    )
+
+
 def refresh_downsample(
     spark: SparkSession,
     raw_path: str,
@@ -702,205 +702,54 @@ def refresh_downsample(
     corrections to the raw store, the downsample tiers derived from it
     are stale for exactly those days, and re-deriving the WHOLE sink
     (the reference's recoverRRD, code/etsdCmd.c:648-656) is O(store).
-    This recomputes only the named days' buckets from the raw store
-    and installs each day through the crash-safe rename swap;
-    untouched sink partitions are never listed, read, or rewritten.
+    ``days=[...]`` recomputes only the named days' buckets from the
+    raw store; ``days=None`` rebuilds the full sink. The sink layout is
+    date-partitioned (``dt=`` from the bucket start) — the partitioned
+    twin of :func:`replay`'s flat sink, and what the CLI ``recover
+    --days`` writes.
 
-    When the raw store is ``dt=``-partitioned the day filter goes on
-    the PARTITION column alone (``dt == day``) so Catalyst prunes the
-    scan to that one directory — a ``to_date(ts)`` predicate is a
-    data-column filter that plans tasks over EVERY day's files AND is
-    session-timezone dependent (plan-pinned: non-empty
-    PartitionFilters and scan_files == the day's file count). A flat
-    raw store falls back to the ts predicate.
+    Both go through ``sources.store.refresh_day_tier``, which owns the
+    rules: ``width_s`` must divide 86400, the ``_downsample_meta.json``
+    sidecar must record the same ``width_s`` (``amend --refresh-sink``
+    validates ``--refresh-width`` against it before touching the
+    store), the day filter prunes the raw scan to that one ``dt=``
+    partition (plan-pinned), each day installs through the crash-safe
+    swap, and ``target_files`` sets the per-day output fan-out.
 
-    ``target_files`` controls the per-day output fan-out (same knob as
-    :func:`sources.store.compact_partition`): default 1 keeps today's
-    single-file layout; a hot day at scale can spread its rewrite
-    across N write tasks.
-
-    The sink root carries a ``_downsample_meta.json`` sidecar
-    recording ``width_s`` (the digest tier's ``_digest_meta.json``
-    pattern): a day-scoped refresh at a DIFFERENT width raises instead
-    of silently mixing bucket widths inside one sink, and ``amend
-    --refresh-sink`` validates ``--refresh-width`` against it before
-    touching the store.
-
-    The sink layout is date-partitioned (``dt=`` from the bucket
-    start) — the partitioned twin of :func:`replay`'s flat sink, and
-    what the CLI ``recover --days`` writes. ``days=None`` rebuilds the
-    full sink in the same layout. ``width_s`` must divide 86400 so no
-    bucket spans a day boundary (raises otherwise — a day-scoped
-    rewrite of a cross-midnight bucket would drop the neighbor day's
-    contribution).
-
-    Same aggregate expressions as the live foreachBatch sink and the
+    Same :func:`consolidate` as the live foreachBatch sink and the
     flat replay, so a refreshed day is bit-identical to a full
-    recompute of that day (test-pinned). The consolidation carries
-    ``sum_value`` (exact DECIMAL sums) alongside the display
-    ``avg_value`` — sums compose associatively where stored doubles
-    don't, which is what lets :func:`operators.trends.fetch_from_tier`
-    answer coarser requests from this sink bit-identically to a raw
-    scan. Returns {day: n_buckets}.
+    recompute of that day (test-pinned). Returns {day: n_buckets}.
     """
-    if int(width_s) <= 0 or 86_400 % int(width_s) != 0:
-        raise ValueError(
-            f"refresh_downsample: width_s={width_s} must be a positive "
-            "divisor of 86400 — a bucket would span a day boundary "
-            "and a day-scoped rewrite would lose the neighbor day's "
-            "rows"
-        )
-    from etsd_time_series_database_spark.sources.store import (
-        _hadoop_fs,
-        buckets_misaligned,
-        day_scoped,
-        read_meta_sidecar,
-        swap_in_dir,
-        write_meta_sidecar,
-    )
-
-    sink_meta = {"width_s": int(width_s)}
+    tier = downsample_tier(width_s)  # width checked before any read
     raw = spark.read.parquet(raw_path)
     # key columns adapt to the store flavor: canonical ingest tables
     # carry (source, channel); events stores carry event_type
     channel = "channel" if "channel" in raw.columns else "event_type"
     keys = (["source"] if "source" in raw.columns else []) + [channel]
 
-    def consolidated(df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy(
-                *keys,
-                F.window("ts", f"{int(width_s)} seconds").alias("w"),
-            )
-            .agg(
-                F.count("value").alias("n"),
-                F.sum(F.col("value").cast("decimal(18,6)")).alias(
-                    "sum_value"
-                ),
-                F.avg("value").alias("avg_value"),
-                F.min("value").alias("min_value"),
-                F.max("value").alias("max_value"),
-            )
-            .select(
-                *keys,
-                F.col("w.start").alias("bucket_ts"),
-                "n",
-                "sum_value",
-                "avg_value",
-                "min_value",
-                "max_value",
-            )
-        )
+    @functools.cache
+    def legacy_cols() -> list[str] | None:
+        # pre-round-14 sink (no carried exact sums): preserve ITS
+        # column set rather than upgrading one day — a mixed-schema
+        # sink would let fetch compose null sums for un-refreshed days;
+        # a full rebuild (days=None) is the upgrade path. First called
+        # for the first refreshed day, after the tier check and before
+        # any day is installed.
+        fs, Path = _hadoop_fs(spark, sink_path)
+        if not fs.exists(Path(sink_path)):
+            return None
+        cols = spark.read.parquet(sink_path).columns
+        return None if "sum_value" in cols else [c for c in cols if c != "dt"]
 
-    if days is None:
-        full = consolidated(raw).withColumn("dt", F.to_date("bucket_ts"))
-        if int(target_files) > 1:
-            # fan each day out across up to target_files write tasks —
-            # deterministic (channel, bucket)-hash salt, so the knob
-            # works for a full rebuild exactly as for a --days refresh
-            # without the round-robin+partitionBy anti-pattern (every
-            # task holding a writer for every day). Salting by channel
-            # alone degenerates when few channels share a hash parity.
-            # explicit partition count: a column-only repartition is
-            # advisory and AQE coalesces the tiny shuffle back into
-            # one task per day, silently undoing the salt
-            n_part = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            full = full.repartition(
-                n_part,
-                F.col("dt"),
-                F.pmod(
-                    F.abs(F.hash(channel, "bucket_ts")),
-                    F.lit(int(target_files)),
-                ),
-            )
-        else:
-            full = full.repartition("dt")
-        (
-            full.sortWithinPartitions(channel, "bucket_ts")
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(sink_path)
-        )
-        write_meta_sidecar(
-            spark, sink_path, "_downsample_meta.json", sink_meta
-        )
-        out = spark.read.parquet(sink_path)
-        return {
-            r.dt.isoformat(): r.n
-            for r in out.groupBy("dt").count().withColumnRenamed(
-                "count", "n"
-            ).collect()
-        }
+    def sink_rows(df: DataFrame) -> DataFrame:
+        out = consolidate(df, keys, width_s)
+        cols = legacy_cols() if days is not None else None
+        return out if cols is None else out.select(*cols)
 
-    import uuid
-
-    fs, Path = _hadoop_fs(spark, sink_path)
-    existing = read_meta_sidecar(spark, sink_path, "_downsample_meta.json")
-    if existing is not None and existing != sink_meta:
-        raise ValueError(
-            f"refresh_downsample: sink {sink_path} was built with "
-            f"{existing} but this refresh asked for {sink_meta} — a "
-            "day-scoped refresh at a different width would mix bucket "
-            "widths inside one sink; rebuild it (days=None) to change "
-            "the width"
-        )
-    if existing is None and fs.exists(Path(sink_path)):
-        # pre-sidecar sink: before ADOPTING the caller's width as its
-        # meta, check every existing bucket aligns to it — stamping an
-        # unvalidated claim would both mix widths in this refresh and
-        # lock the wrong width in for every future one. (A claimed
-        # width FINER than the build width divides its buckets and is
-        # undetectable from data; the sidecar closes that for every
-        # sink built from round 13 on.)
-        if buckets_misaligned(spark, sink_path, width_s, "bucket_ts"):
-            raise ValueError(
-                f"refresh_downsample: sink {sink_path} holds buckets "
-                f"not aligned to width_s={width_s} — it was built at a "
-                "different width; pass the sink's own width, or "
-                "rebuild it (days=None) to change the width"
-            )
-        write_meta_sidecar(
-            spark, sink_path, "_downsample_meta.json", sink_meta
-        )
-    # pre-round-14 sink (no carried exact sums): preserve ITS column
-    # set rather than upgrading one day — a mixed-schema sink would
-    # let fetch compose null sums for un-refreshed days; a full
-    # rebuild (days=None) is the upgrade path
-    legacy_cols: list[str] | None = None
-    if fs.exists(Path(sink_path)):
-        sink_cols = spark.read.parquet(sink_path).columns
-        if "sum_value" not in sink_cols:
-            legacy_cols = [c for c in sink_cols if c != "dt"]
-    stats: dict = {}
-    for d in sorted(days):
-        day_rows = day_scoped(raw, d)
-        fresh = (
-            consolidated(day_rows)
-            .repartition(int(target_files))
-            .sortWithinPartitions(channel, "bucket_ts")
-        )
-        if legacy_cols is not None:
-            fresh = fresh.select(*legacy_cols)
-        token = uuid.uuid4().hex
-        tmp = f"{sink_path}/__refresh_{token}"
-        fresh.write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
-        part_dir = f"{sink_path}/dt={d}"
-        old = f"{sink_path}/__old_{token}"
-        had_old = fs.exists(Path(part_dir))
-        if n == 0:
-            # the raw day vanished (e.g. drained by a cross-day amend):
-            # drop the sink day rather than install an empty partition
-            fs.delete(Path(tmp), True)
-            if had_old:
-                fs.delete(Path(part_dir), True)
-            stats[d] = 0
-            continue
-        swap_in_dir(fs, Path, tmp, part_dir, old, "refresh")
-        stats[d] = n
-    return stats
+    return refresh_day_tier(
+        spark, raw, sink_path, tier, sink_rows, channel,
+        F.to_date("bucket_ts"), days, target_files,
+    )
 
 
 def carry_forward_batch(batch: DataFrame, state: DataFrame | None) -> tuple[DataFrame, DataFrame]:

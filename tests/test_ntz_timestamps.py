@@ -164,3 +164,42 @@ def test_ts_bound_grammar_accepts_spark_cast_short_forms(spark, ntz_dir):
         ).count()
         == 3
     )
+
+
+def test_cli_query_reads_nanos_through_vanilla_session(spark, tmp_path, capsys):
+    """The CLI verbs read through store.read_ts_parquet, so a caller's
+    SparkSession without this repo's confs (nanosAsLong off, Spark's
+    default) still reads a TIMESTAMP(NANOS) file — it used to raise
+    PARQUET_TYPE_ILLEGAL — and prints the same stats."""
+    from etsd_time_series_database_spark import cli
+
+    path = str(tmp_path / "nanos.parquet")
+    ts = pa.array(
+        [1_704_067_200_000_000_123, 1_704_070_800_000_000_456,
+         1_704_153_600_000_000_789],  # 2024-01-01 00:00, 01:00, 01-02
+        type=pa.timestamp("ns", tz="UTC"),
+    )
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3]),
+            "ts": ts,
+            "event_type": pa.array(["click", "click", "view"]),
+            "value": pa.array([1.5, 2.5, 4.0]),
+        }),
+        path,
+    )
+    vanilla = spark.newSession()
+    vanilla.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    rc = cli.main(
+        ["query", path, "-s", "2024-01-01", "-e", "2024-01-03", "-q", "tot"],
+        spark=vanilla,
+    )
+    out = capsys.readouterr().out
+    assert rc == 0
+    assert "total_value" in out
+    rows = {
+        line.split("|")[1].strip(): line.split("|")[2].strip()
+        for line in out.splitlines()
+        if line.startswith("|") and "total_value" not in line
+    }
+    assert rows == {"click": "4.0", "view": "4.0"}

@@ -107,3 +107,45 @@ def test_selfcheck_snapshots_are_scale_distinct():
     b = json.loads((REPO / "SELFCHECK_SF01.json").read_text())
     assert a["x31_segment_dedup"]["spark_rows"] == 500
     assert b["x31_segment_dedup"]["spark_rows"] == 5000
+
+
+# The two installs sources/store.py:swap_in_dir cannot express, with the
+# number of .rename( calls each makes: compact_stream_sink rewrites a
+# streaming sink's commit log (data files staged in place, log files
+# and manifest renamed over), and rebalance_cells installs one IVF cell
+# as N sub-cells (move aside, N renames in, rollback).
+RENAME_ALLOWLIST = {
+    ("streaming/ingest.py", "compact_stream_sink"): 3,
+    ("operators/similarity.py", "rebalance_cells"): 3,
+}
+
+
+def test_directory_installs_go_through_swap_in_dir():
+    """Storage verbs replace a directory only through
+    ``sources.store.swap_in_dir`` (move aside, install, roll back):
+    no module other than sources/store.py calls ``.rename(`` outside
+    the allowlisted protocols. An inline copy reappearing — or an
+    allowlisted protocol changing shape — fails here."""
+    import ast
+
+    pkg = REPO / "etsd_time_series_database_spark"
+    found: dict[tuple[str, str], int] = {}
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        if rel == "sources/store.py":
+            continue
+        for top in ast.parse(f.read_text()).body:
+            owner = getattr(top, "name", "<module>")
+            n = sum(
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "rename"
+                for node in ast.walk(top)
+            )
+            if n:
+                found[(rel, owner)] = found.get((rel, owner), 0) + n
+    assert found == RENAME_ALLOWLIST, (
+        f".rename( calls outside sources/store.py: {found}; install a "
+        "directory with sources.store.swap_in_dir, or (for a protocol it "
+        "cannot express) extend RENAME_ALLOWLIST with the reason"
+    )
